@@ -41,13 +41,10 @@ RUNTIME_CONF: dict[str, str] = {
     # the guide's recommended production baseline, not a local-mode
     # tune; measured same-session at sf0.1 (min-of-4, flag toggled
     # per rep): the 10 sort-merge-bearing headline queries total
-    # 38.0 s -> 35.9 s with identical results.  Parameterized
-    # (SPARK_GRAFT_PREFER_SMJ=true restores the Spark default) so
-    # deployments where build-side memory is the binding constraint
-    # can re-pin sort-merge.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
+    # 38.0 s -> 35.9 s with identical results.  A deployment where
+    # build-side memory is the binding constraint sets it back to
+    # "true" on its session.
+    "spark.sql.join.preferSortMergeJoin": "false",
 }
 
 
@@ -73,12 +70,6 @@ def get_spark(app_name: str = "go-otel-clickhouse-ingestor-spark") -> SparkSessi
     and only the SQL confs below matter.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # wire in a vendored protobuf runtime (if one exists on the host)
-    # BEFORE the JVM launches so Python workers inherit the PYTHONPATH —
-    # transformWithStateInPandas' state protocol needs google.protobuf
-    from .streaming.protobuf_compat import ensure_protobuf
-
-    ensure_protobuf()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -105,4 +96,4 @@ def get_spark(app_name: str = "go-otel-clickhouse-ingestor-spark") -> SparkSessi
         )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
-    return apply_runtime_conf(builder.getOrCreate())
+    return builder.getOrCreate()

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import parse_envelope, translate_envelope
+from .lake_state import drop_partitions, overwrite_partitions, read_partitions
 
 
 def translate_stream(kafka_shaped: DataFrame) -> DataFrame:
@@ -103,16 +104,17 @@ def kafka_cdc_stream(
 N_STATE_BUCKETS = 16
 
 
-def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
+def upsert_foreach_batch(state_dir: str):
     """A16 online: a foreachBatch MERGE maintaining the versions +
     current-state tables (latest ``_lsn`` per id, soft deletes kept as
     versions), id-bucketed so per-batch work is O(touched state), not
     O(total state).
 
     Layout: ``versions/`` and ``current/`` are parquet partitioned by
-    ``bucket = pmod(xxhash64(id), n_buckets)``.  Each micro-batch:
+    ``bucket = pmod(xxhash64(id), N_STATE_BUCKETS)``.  Each micro-batch:
 
-    1. finds the buckets its ids hash into (bounded by ``n_buckets``),
+    1. finds the buckets its ids hash into (bounded by
+       ``N_STATE_BUCKETS``),
     2. reads ONLY those partitions (partition-pruned scan), unions the
        new rows, dedupes exact replays (idempotent under the
        at-least-once retry), and
@@ -132,59 +134,25 @@ def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
         spark = batch_df.sparkSession
         from ..operators.cdc import current_state
 
-        batch = batch_df.withColumn(
-            "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
-        )
+        bucket = F.pmod(F.xxhash64("id"), F.lit(N_STATE_BUCKETS))
+        batch = batch_df.withColumn("bucket", bucket)
         touched = [r.bucket for r in batch.select("bucket").distinct().collect()]
         if not touched:
             return
         versions_dir = state_dir + "/versions"
-        from pyspark.errors import AnalysisException
-
-        try:
-            existing = spark.read.parquet(versions_dir).filter(
-                F.col("bucket").isin(touched)
-            )
-        except AnalysisException as exc:
-            # ONLY the missing-path case means "no prior state" (first
-            # batch).  Any other failure (transient IO, corrupt footer,
-            # schema drift) must propagate so Structured Streaming
-            # retries the batch — swallowing it would dynamic-overwrite
-            # the touched buckets with batch-only rows: permanent state
-            # loss instead of a retryable error.
-            cls = exc.getErrorClass() or ""
-            if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
-                raise
-            existing = None
+        existing = read_partitions(spark, versions_dir, "bucket", touched)
         merged = existing.unionByName(batch) if existing is not None else batch
         # localCheckpoint: materializes the merged buckets and cuts the
         # lineage back to versions_dir, so the overwrite below is not
         # reading the path it writes.
         merged = merged.dropDuplicates().localCheckpoint(eager=True)
-
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(versions_dir)
-            cur = current_state(merged).withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
-            )
-            cur.write.mode("overwrite").partitionBy("bucket").parquet(
-                state_dir + "/current"
-            )
-            # Dynamic overwrite only replaces partitions PRESENT in the
-            # written data: a touched bucket whose last live id was just
-            # deleted produces no current rows, so its stale partition
-            # must be dropped explicitly.  (A lake-format MERGE/DELETE
-            # subsumes this.)
-            import shutil
-
-            live = {r.bucket for r in cur.select("bucket").distinct().collect()}
-            for b in set(touched) - live:
-                shutil.rmtree(f"{state_dir}/current/bucket={b}", ignore_errors=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        overwrite_partitions(merged, versions_dir, "bucket")
+        cur = current_state(merged).withColumn("bucket", bucket)
+        overwrite_partitions(cur, state_dir + "/current", "bucket")
+        # a touched bucket whose last live id was just deleted produces
+        # no current rows, so its stale partition is dropped explicitly
+        # (a lake-format MERGE/DELETE subsumes this)
+        live = {r.bucket for r in cur.select("bucket").distinct().collect()}
+        drop_partitions(spark, state_dir + "/current", "bucket", set(touched) - live)
 
     return apply

@@ -25,7 +25,10 @@ multi-table topology the reference's envelope already uses,
   never scanned whole);
 - state is O(inputs) in the LAKE (the two base tables), zero executor
   state — same argument as the near-dup index's foreachBatch face:
-  this state must outlive the query and serve batch readers anyway.
+  this state must outlive the query and serve batch readers anyway;
+- the pruned read is the shared ``lake_state.read_partitions`` (None
+  before a side's first append), so the state dir may be a local path
+  or any Hadoop URI.
 
 Exactly-once: like ``matview_foreach_batch``, appends replayed after a
 crash between view-append and acc-append could double rows; the
@@ -40,30 +43,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lake_state import read_partitions
+
 #: custkey-bucket fanout of the accumulated sides.  16 at fixture
 #: scale; at 100 TB this is the lake table's bucket/partition spec —
 #: the delta-join prune ratio is 1/buckets per touched key.
 N_BUCKETS = 16
 
-_A_SCHEMA = "o_orderkey long, o_custkey long, o_totalprice double"
-_B_SCHEMA = "c_custkey long, c_name string, c_mktsegment string"
-
 
 def _bucket(key):
     return F.pmod(key, F.lit(N_BUCKETS))
-
-
-def _read_side(spark, path: str, schema: str) -> DataFrame:
-    """Accumulated side as of the previous batch; empty-typed frame
-    before the first append (the matview PATH_NOT_FOUND discipline)."""
-    import os
-
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema + ", bucket int")
-    return spark.read.schema(
-        # partition column comes back from the directory layout
-        schema + ", bucket int"
-    ).parquet(path)
 
 
 def join_matview_foreach_batch(state_dir: str):
@@ -95,14 +84,15 @@ def join_matview_foreach_batch(state_dir: str):
         )
         da = da.localCheckpoint(eager=True)  # the delta is read 3×
         db = db.localCheckpoint(eager=True)
-        a_old = _read_side(spark, f"{state_dir}/a_acc", _A_SCHEMA)
-        b_old = _read_side(spark, f"{state_dir}/b_acc", _B_SCHEMA)
 
         # bucket prune: the history side is scanned ONLY in the
         # partitions the delta touches (tiny literal IN list — buckets
-        # are bounded by N_BUCKETS, not by the batch)
+        # are bounded by N_BUCKETS, not by the batch); None before the
+        # side's first append
         a_buckets = [r.bucket for r in da.select("bucket").distinct().collect()]
         b_buckets = [r.bucket for r in db.select("bucket").distinct().collect()]
+        b_old = read_partitions(spark, f"{state_dir}/b_acc", "bucket", a_buckets)
+        a_old = read_partitions(spark, f"{state_dir}/a_acc", "bucket", b_buckets)
 
         on = F.col("o_custkey") == F.col("c_custkey")
         cols = [
@@ -113,20 +103,10 @@ def join_matview_foreach_batch(state_dir: str):
             "c_mktsegment",
         ]
         parts = []
-        if a_buckets:
-            parts.append(
-                da.join(
-                    b_old.filter(F.col("bucket").isin(a_buckets)).drop("bucket"),
-                    on,
-                ).select(*cols)
-            )
-        if b_buckets:
-            parts.append(
-                a_old.filter(F.col("bucket").isin(b_buckets))
-                .drop("bucket")
-                .join(db, on)
-                .select(*cols)
-            )
+        if a_buckets and b_old is not None:
+            parts.append(da.join(b_old.drop("bucket"), on).select(*cols))
+        if b_buckets and a_old is not None:
+            parts.append(a_old.drop("bucket").join(db, on).select(*cols))
         if a_buckets and b_buckets:
             parts.append(da.join(db.drop("bucket"), on).select(*cols))
         if parts:

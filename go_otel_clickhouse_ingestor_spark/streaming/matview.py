@@ -16,7 +16,9 @@ micro-batch only needs:
 State is O(view), not O(stream): the raw events are never re-read.
 This is the same id-bucketed MERGE discipline as
 ``cdc_stream.upsert_foreach_batch`` (A16) applied to additive
-aggregation — at 100 TB the view partitions by (event_type, day) and a
+aggregation, on the same partition reader and per-write dynamic
+overwrite (``lake_state.py``), so the view dir may be any Hadoop path
+or URI — at 100 TB the view partitions by (event_type, day) and a
 batch rewrites only the slivers it touched.  A transactional
 lake-format MERGE replaces the file dance in production; the
 incremental-combine strategy is identical.
@@ -26,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .lake_state import overwrite_partitions, read_partitions
 
 
 def hourly_rollup(batch_df: DataFrame) -> DataFrame:
@@ -59,28 +63,13 @@ def matview_foreach_batch(view_dir: str):
         touched = [r.event_type for r in partial.select("event_type").distinct().collect()]
         if not touched:
             return
-        from pyspark.errors import AnalysisException
-
-        try:
-            existing = spark.read.parquet(view_dir).filter(
-                F.col("event_type").isin(touched)
-            )
-        except AnalysisException as exc:
-            cls = exc.getErrorClass() or ""
-            if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
-                raise
-            existing = None
+        existing = read_partitions(spark, view_dir, "event_type", touched)
         merged = partial if existing is None else existing.unionByName(partial)
         combined = (
             merged.groupBy("event_type", "bucket_us")
             .agg(F.sum("n").alias("n"), F.sum("total_value").alias("total_value"))
             .localCheckpoint(eager=True)  # cut self-referential lineage pre-overwrite
         )
-        (
-            combined.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("event_type")
-            .parquet(view_dir)
-        )
+        overwrite_partitions(combined, view_dir, "event_type")
 
     return apply

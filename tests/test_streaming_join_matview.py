@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_otel_clickhouse_ingestor_spark.streaming.join_matview import (
@@ -31,7 +32,8 @@ def _rows(side, frame):
     return out
 
 
-def test_join_matview_matches_batch_join_across_triggers(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_join_matview_matches_batch_join_across_triggers(spark, sf_dir, tmp_path, as_uri):
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -54,7 +56,8 @@ def test_join_matview_matches_batch_join_across_triggers(spark, sf_dir, tmp_path
         "\n".join(_rows("a", o2) + _rows("b", c2))
     )
 
-    state = str(tmp_path / "state")
+    # a file:// URI state dir must behave exactly like the plain path
+    state = (tmp_path / "state").as_uri() if as_uri else str(tmp_path / "state")
     stream = (
         spark.readStream.schema(_FEED_SCHEMA)
         .option("maxFilesPerTrigger", 1)

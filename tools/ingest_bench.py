@@ -4,7 +4,7 @@ The reference's only quantitative performance fact is its synthetic
 pacing default — 5 events/sec (``cmd/root.go:65``) — with a
 row-at-a-time HTTP INSERT per message as the architectural ceiling.
 This tool measures the engine's counterpart end-to-end: the
-``cdc_feed_part`` partition-planned source → the UNMODIFIED
+``cdc_feed`` partition-planned stream source → the UNMODIFIED
 parse/translate pipeline (double-encode fallback, malformed drop,
 op→enum, µs→ts — every reference branch) → parquet lake sink, via a
 real Structured Streaming query with a checkpoint, and reports
@@ -52,7 +52,7 @@ def main() -> None:
     ckpt = os.path.join(work, "ckpt")
     try:
         raw = (
-            spark.readStream.format("cdc_feed_part")
+            spark.readStream.format("cdc_feed")
             .option("partitions", n_parts)
             .option("available", per_part)
             .load()
